@@ -13,14 +13,20 @@ Spark-first:
 - nested JSON records flatten to dot-joined columns
   (``pd.json_normalize`` semantics, extract_load.py:90-91);
 - pagination (DRF-style ``count``/``next``/``results`` envelopes) loops
-  server pages and combines per-page DataFrames with
-  ``unionByName(allowMissingColumns=True)`` so column drift across
-  pages cannot break the batch.
+  server pages; each page becomes a ``pyarrow.Table`` and the pages are
+  joined with ``pa.concat_tables(promote_options="permissive")``, so
+  column drift across pages cannot break the batch (a column missing
+  from a page is NULL there, long/double drift widens to double, and a
+  field that is null in every row of a page stays an untyped NULL
+  column instead of failing type inference).
 
 The HTTP layer is INJECTABLE (``fetch=``): tests and replays substitute
 a stub; production uses the urllib default. The fetch happens on the
 driver — correct at any scale, because the API (not Spark) is the
-bottleneck; rows then distribute via ``spark.createDataFrame``. For a
+bottleneck. The joined Arrow table reaches Spark as one in-JVM local
+relation (``LocalTableScan``): no Python RDD, so no Python worker
+re-runs the scan in each job that reads it, as a
+``createDataFrame(list_of_dicts)`` scan (``Scan ExistingRDD``) would. For a
 truly huge external source this becomes a Python Data Source
 (``spark.dataSource.register``) with per-partition page ranges — same
 interface, different executor placement.
@@ -31,9 +37,9 @@ from __future__ import annotations
 import json
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
-from functools import reduce
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_BASE_URL = "https://apidf-preprod.cerema.fr/indicateurs/dv3f"
@@ -131,7 +137,8 @@ def paginate(
                 raise RestApiError(f"request succeeded but returned no rows ({endpoint})")
             return
         flat = [flatten_record(r) for r in results]
-        # uniform keys within the page (records may omit null fields)
+        # uniform keys within the page (records may omit null fields;
+        # ``pa.Table.from_pylist`` takes its columns from the first row)
         keys: list[str] = []
         for r in flat:
             for k in r:
@@ -154,7 +161,8 @@ def read_api(
     fetch: FetchFn = default_http_fetch,
     base_url: str = DEFAULT_BASE_URL,
 ) -> DataFrame:
-    """S1 — paginated REST scan → one DataFrame.
+    """S1 — paginated REST scan → one DataFrame over an Arrow-backed
+    local relation.
 
     ``ordering`` is pushed to the server verbatim (O4); ``annee`` is a
     source-side filter (the param-pushdown analog of P5).
@@ -163,10 +171,5 @@ def read_api(
     params = prune_params(
         {"annee": annee, "ordering": ordering, "page": page, "page_size": page_size}
     )
-    pages = [
-        spark.createDataFrame(rows)  # type: ignore[arg-type]
-        for rows in paginate(fetch, endpoint, params)
-    ]
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), pages
-    )
+    pages = [pa.Table.from_pylist(rows) for rows in paginate(fetch, endpoint, params)]
+    return spark.createDataFrame(pa.concat_tables(pages, promote_options="permissive"))

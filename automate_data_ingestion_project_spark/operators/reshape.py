@@ -10,8 +10,10 @@ an API payload arrives wide — id columns plus one column per
 4. re-pivots per metric with ``first()`` aggregation                (R2/A1, L164-169)
 5. adds ``uid = sha256(concat of key cols, NO separator)``          (F3, L171-193)
 
-Everything here is native Spark: ``unpivot`` (whole-stage codegen'd
-expand), string expressions, ``pivot`` with an explicit value list (so
+Everything here is native Spark: one ``stack`` generator in a single
+``selectExpr`` for the melt (a ``Generate`` node, planned from one SQL
+string instead of one Py4J ``Column`` call per value column), string
+expressions, ``pivot`` with an explicit value list (so
 no extra distinct-discovery job is launched), ``sha2``. The reference's
 row-wise pandas ``apply`` hashing becomes a codegen'd expression — at
 100 TB this chain is one scan + one shuffle (the pivot's groupBy),
@@ -35,15 +37,39 @@ def melt(
 ) -> DataFrame:
     """R1 — wide→long unpivot, pandas-``melt`` semantics (nulls kept).
 
-    Value columns are cast to double first: parquet payloads mix long
-    (``nbtrans``) and double (indicator) columns, and ``unpivot``
-    requires one common value type — same coercion pandas applies.
+    Value columns are cast to double: parquet payloads mix long
+    (``nbtrans``) and double (indicator) columns, and the long value
+    column needs one common type — same coercion pandas applies.
+
+    The whole projection is ONE ``selectExpr`` over
+    ``stack(n, '<name>', CAST(`<name>` AS DOUBLE), …)``: a payload has
+    ~50 value columns, and building one ``Column`` per value column
+    costs a Py4J round trip each at plan time. Identifiers are
+    backtick-quoted (``json_normalize`` emits dotted names such as
+    ``geo.lat``) and labels are escaped SQL string literals.
     """
-    value_vars = value_vars or [c for c in df.columns if c not in id_vars]
-    casted = df.select(
-        *id_vars, *[F.col(c).cast("double").alias(c) for c in value_vars]
+    if value_vars is None:
+        value_vars = [c for c in df.columns if c not in id_vars]
+    if not value_vars:
+        raise ValueError("melt needs at least one value column")
+    cells = ", ".join(
+        f"{_sql_string(c)}, CAST({_quote_ident(c)} AS DOUBLE)" for c in value_vars
     )
-    return casted.unpivot(id_vars, value_vars, var_name, value_name)
+    return df.selectExpr(
+        *map(_quote_ident, id_vars),
+        f"stack({len(value_vars)}, {cells})"
+        f" AS ({_quote_ident(var_name)}, {_quote_ident(value_name)})",
+    )
+
+
+def _quote_ident(name: str) -> str:
+    """Backtick-quote a column name for a SQL expression string."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(value: str) -> str:
+    """Single-quoted SQL string literal that parses back to ``value``."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def split_metric_code(

@@ -16,6 +16,12 @@ After fetch, everything is one lazy plan per scope:
         normalize_wide ONCE               (one scan + one shuffle)
         upsert into src_<scope>           (L1, schema-reconciled)
 
+Each code's payload is an Arrow-backed local relation (``read_api``),
+so the union is a union of in-JVM ``LocalTableScan``s: no Python worker
+re-runs a page scan in any of the upsert's jobs, and the reshape melts
+through one ``stack`` expression rather than one ``Column`` per value
+column.
+
 At 100 TB the per-scope union is the difference between 119 tiny jobs
 (scheduler-bound) and one job whose parallelism comes from partitions.
 

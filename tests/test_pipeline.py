@@ -83,3 +83,28 @@ def test_pipeline_all_codes_failing_writes_nothing(spark):
     assert reports[0].codes_failed and not reports[0].codes_ok
     assert reports[0].rows_upserted == 0
     assert not os.path.isdir(paths["departement"])
+
+
+def test_pipeline_keeps_code_whose_page_has_an_all_null_field(spark):
+    """DV3F returns null indicators for thin markets: a page where one
+    field is null in every row must not fail type inference and drop
+    the whole code into ``codes_failed``."""
+
+    def thin_market(url, params):
+        rec = {
+            "annee": "2014",
+            "dep": "01",
+            "libdep": "D01",
+            **{f"{m}_cod111": float(i) + 0.5 for i, m in enumerate(METRICS)},
+            "nbtrans_cod111": None,
+        }
+        return RestResponse(200, {"count": 1, "next": None, "results": [rec]})
+
+    cfg = load_pipeline_config("args:\n  scope:\n    departement: ['01']\n")
+    path = os.path.join(scratch_dir("test_pipeline_null_field"), "src_departement")
+    (report,) = run_pipeline(spark, cfg, {"departement": path}, METRICS, thin_market)
+    assert report.codes_ok == ["01"] and not report.codes_failed
+    assert report.rows_upserted == 1
+    (row,) = spark.read.parquet(path).collect()
+    assert row.nbtrans is None
+    assert [row[m] for m in METRICS[1:]] == [float(i) + 0.5 for i in range(1, len(METRICS))]

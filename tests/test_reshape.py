@@ -16,6 +16,7 @@ import hashlib
 
 import duckdb
 import pandas as pd
+import pytest
 
 from automate_data_ingestion_project_spark.analytics.dv3f import (
     ID_VARS,
@@ -23,7 +24,7 @@ from automate_data_ingestion_project_spark.analytics.dv3f import (
     UID_COLS,
     WIDE_FIXTURE_SQL,
 )
-from automate_data_ingestion_project_spark.operators.reshape import normalize_wide
+from automate_data_ingestion_project_spark.operators.reshape import melt, normalize_wide
 
 
 def _pandas_reference_chain(wide: pd.DataFrame) -> pd.DataFrame:
@@ -105,3 +106,30 @@ def test_split_metric_code_no_separator(spark):
     }
     assert rows["plain"] == ("plain", None)
     assert rows["a_cod1"] == ("a", "1")
+
+
+def test_melt_edge_names_match_pandas(spark):
+    """Dotted ``json_normalize`` names, quotes and backticks survive the
+    one-expression ``stack`` melt: pandas-``melt`` rows, nulls kept,
+    every value double, labels exact."""
+    wide = pd.DataFrame(
+        {
+            "id": ["a", "b"],
+            "geo.lat": [1.5, None],
+            "a'b": [1, 2],
+            "a`b": [None, 3.0],
+            "c\\d": [4.0, 5.0],
+        }
+    )
+    got = melt(spark.createDataFrame(wide), ["id"])
+    assert dict(got.dtypes) == {"id": "string", "cod_full": "string", "valeur": "double"}
+    expected = wide.melt(id_vars=["id"], var_name="cod_full", value_name="valeur")
+    assert _normalize_for_compare(got.toPandas()) == _normalize_for_compare(expected)
+
+
+def test_melt_without_value_columns_raises(spark):
+    df = spark.createDataFrame([("a", 1.0)], "id string, v double")
+    with pytest.raises(ValueError, match="at least one value column"):
+        melt(df, ["id", "v"])
+    with pytest.raises(ValueError, match="at least one value column"):
+        melt(df, ["id"], value_vars=[])

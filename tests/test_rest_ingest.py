@@ -12,6 +12,9 @@ from automate_data_ingestion_project_spark.analytics.dv3f import (
     METRICS,
     UID_COLS,
 )
+from automate_data_ingestion_project_spark.analytics.ingest_replay import (
+    rest_ingest_dv3f,
+)
 from automate_data_ingestion_project_spark.analytics.load import scratch_dir
 from automate_data_ingestion_project_spark.ingest.rest import (
     RestApiError,
@@ -71,18 +74,62 @@ def test_flatten_record_nested():
 def test_pagination_unions_pages_with_column_drift(spark):
     fetcher = StubFetcher(
         [
-            [{"annee": "2014", "dep": "01", "v": 1.0}],
-            [{"annee": "2015", "dep": "01", "v": 2.0, "extra": 9.0}],
+            [{"annee": "2014", "dep": "01", "v": 1}],
+            [
+                {
+                    "annee": "2015",
+                    "dep": "01",
+                    "v": 2.5,
+                    "extra": 9.0,
+                    "geo": {"lat": 1.25},
+                }
+            ],
         ]
     )
     df = read_api(spark, "departement", "01", annee=2014, fetch=fetcher)
+    # the types a per-page unionByName(allowMissingColumns=True) produced
+    assert dict(df.dtypes) == {
+        "annee": "string",
+        "dep": "string",
+        "v": "double",  # long on page 1, double on page 2 → widened
+        "extra": "double",
+        "geo.lat": "double",
+    }
     rows = sorted(df.collect(), key=lambda r: r.annee)
     assert len(rows) == 2
-    assert rows[0].extra is None  # drift handled by unionByName
+    assert rows[0].extra is None and rows[0]["geo.lat"] is None  # drift → NULL
+    assert (rows[0].v, rows[1].v, rows[1]["geo.lat"]) == (1.0, 2.5, 1.25)
     # ordering param pruned (None), annee pushed (P7/O4)
     assert all("ordering" not in p for _, p in fetcher.calls)
     assert fetcher.calls[0][1]["annee"] == 2014
     assert fetcher.calls[1][1]["page"] == 2
+
+    # ``rest_ingest_dv3f``: ``note`` only appears on the last server page
+    df = rest_ingest_dv3f(spark, "")
+    assert dict(df.dtypes) == {
+        "annee": "string",
+        "dep": "string",
+        "valeur": "double",
+        "geo_lat": "double",
+        "geo_lon": "double",
+        "note": "string",
+    }
+    notes = {r.annee: r.note for r in df.collect()}
+    assert len(notes) == 12
+    assert all(notes[str(2000 + j)] is None for j in range(10))
+    assert (notes["2010"], notes["2011"]) == ("n10", "n11")
+
+
+def test_read_api_plan_is_local_relation_without_python_scan(spark):
+    """Pages reach Spark as an in-JVM local relation: no Python RDD
+    that Python workers would re-run in every job reading it."""
+    fetcher = StubFetcher(
+        [[{"annee": "2014", "v": 1.0}], [{"annee": "2015", "v": 2.0}]]
+    )
+    plan = read_api(spark, "region", "11", fetch=fetcher)._jdf.queryExecution()
+    physical = plan.executedPlan().toString()
+    assert "LocalTableScan" in physical
+    assert "ExistingRDD" not in physical and "PythonRDD" not in physical
 
 
 def test_empty_first_page_raises(spark):
